@@ -37,18 +37,18 @@ final class TableIO(spark: SparkSession, root: String) {
     * unpartitioned stages), so [[read]] skips the per-read footer
     * schema-inference pass — the catalog role Iceberg metadata plays.
     * Base64-wrapped because raw schema JSON carries every character the
-    * manifest format forbids.
+    * manifest format forbids. Partitioned stages record no schema (older
+    * manifests an empty one), so their reads infer it.
     */
   private def committedSchema(stage: String): Option[org.apache.spark.sql.types.StructType] =
     manifest(stage).flatMap { m =>
-      "\"schema_b64\":\"([A-Za-z0-9+/=]*)\"".r.findFirstMatchIn(m)
+      "\"schema_b64\":\"([A-Za-z0-9+/=]+)\"".r.findFirstMatchIn(m)
         .map(_.group(1))
-    }.flatMap { b64 =>
-      try Some(org.apache.spark.sql.types.DataType
+    }.map { b64 =>
+      org.apache.spark.sql.types.DataType
         .fromJson(new String(
           java.util.Base64.getDecoder.decode(b64), StandardCharsets.UTF_8))
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
-      catch { case _: Exception => None } // fall back to inference
+        .asInstanceOf[org.apache.spark.sql.types.StructType]
     }
 
   def read(stage: String): DataFrame =
@@ -144,10 +144,10 @@ final class TableIO(spark: SparkSession, root: String) {
     // committed schema (unpartitioned stages only: an explicit schema on
     // a partitioned read would reorder partition columns vs inference,
     // and hive-partitioned stages keep the inference path)
-    val schemaB64 =
+    val schemaField =
       if (partitionBy.isEmpty)
-        java.util.Base64.getEncoder.encodeToString(
-          df.schema.json.getBytes(StandardCharsets.UTF_8))
+        "\"schema_b64\":\"" + java.util.Base64.getEncoder.encodeToString(
+          df.schema.json.getBytes(StandardCharsets.UTF_8)) + "\","
       else ""
     // opaque per-commit identity + the upstream tokens this output was
     // computed against — the staleness guard compares these by equality
@@ -165,8 +165,7 @@ final class TableIO(spark: SparkSession, root: String) {
          |"upstream":[${upstream.map(u => "\"" + u + "\"").mkString(",")}],
          |"upstream_tokens":{$upTokens},
          |"commit_token":"$commitToken",
-         |"schema_b64":"$schemaB64",
-         |"metadata":{$metaJson},
+         |$schemaField"metadata":{$metaJson},
          |"elapsed_ms":$elapsedMs,
          |"committed_at":"${java.time.Instant.now()}"}""".stripMargin
     val tmpManifest = new Path(rootPath, s"_tmp_$stage.manifest.json")

@@ -212,6 +212,9 @@ object ConnectedComponents {
         .groupBy("file_id")
         .agg(min("cid").as("cand_cid"),
           max(when(col("is_self"), col("cid"))).as("old_cid"))
+        // an edge endpoint missing from `vertices` has no self row, so no
+        // old label: drop it, as the RDD loop's join against labels does
+        .where(col("old_cid").isNotNull)
 
       // 2. pointer jumping: take the label of my label's vertex.
       // Parents side carries ONLY non-root vertices (cand_cid < file_id):
@@ -275,7 +278,9 @@ object ConnectedComponents {
     * edges are co-partitioned once, each round is ONE job (edges x
     * frontier narrow join -> message reduceByKey -> narrow label merge ->
     * jump join -> repartition-by-id), and the changed count rides a
-    * LongAccumulator in the materializing action.
+    * LongAccumulator in the materializing action. Each round's labels are
+    * local-checkpointed, so everything older is released as soon as they
+    * exist; on return only the RDD the result reads stays persisted.
     */
   private def runSmallGraph(
       spark: SparkSession,
@@ -288,13 +293,19 @@ object ConnectedComponents {
     val sl = StorageLevel.MEMORY_AND_DISK
     val biRdd = biEdges.as[(Long, Long)].rdd
     val p = new HashPartitioner(math.max(1, biRdd.getNumPartitions))
+    val held = scala.collection.mutable.ArrayBuffer.empty[RDD[_]]
+    def hold[T](r: RDD[T]): RDD[T] = { held += r; r }
+    def release(keep: RDD[_]*): Unit = {
+      val (kept, dropped) = held.partition(r => keep.exists(_ eq r))
+      dropped.foreach(_.unpersist(false))
+      held.clear(); held ++= kept
+    }
     def keyed(df: DataFrame): RDD[(Long, Long)] =
-      df.as[(Long, Long)].rdd.partitionBy(p).persist(sl)
+      hold(df.as[(Long, Long)].rdd.partitionBy(p).persist(sl))
 
-    val edges = biRdd.partitionBy(p).persist(sl)
-    var labels = vertices
-      .select(col("file_id"), col("file_id").as("cluster_id"))
-      .as[(Long, Long)].rdd.partitionBy(p).persist(sl)
+    val edges = hold(biRdd.partitionBy(p).persist(sl))
+    var labels = keyed(
+      vertices.select(col("file_id"), col("file_id").as("cluster_id")))
     var frontier = labels
     var iter = 0
 
@@ -307,7 +318,6 @@ object ConnectedComponents {
         iter = i
     }
 
-    var prev: RDD[(Long, (Long, Boolean))] = null
     var done = false
     while (!done && iter < maxIterations) {
       val acc = spark.sparkContext.longAccumulator(s"cc_changed_$iter")
@@ -335,13 +345,13 @@ object ConnectedComponents {
           (id, (nl, nl != old))
         }
         .partitionBy(p)
-        .persist(sl)
+        .localCheckpoint()
+      hold(next)
       next.count() // ONE materialization per round
+      release(edges, next)
       done = acc.value == 0L
       labels = next.mapValues(_._1)
       frontier = next.filter(_._2._2).mapValues(_._1)
-      if (prev != null) prev.unpersist(false)
-      prev = next
       iter += 1
 
       durable.foreach { case (io, k) =>
@@ -361,6 +371,13 @@ object ConnectedComponents {
     if (done) durable.foreach { case (io, _) =>
       dropAllSnapshots(io, maxIterations)
     }
+    // keep what the result reads: `labels` itself (a keyed copy) or its
+    // parent (the last round's checkpointed `next`); the edge copies and
+    // the caller's edge checkpoint are no longer read by anything
+    release(labels +: labels.dependencies.map(_.rdd): _*)
+    biEdges.queryExecution.logical.collect {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
+    }.foreach(_.unpersist(false))
     (labels.toDF("file_id", "cluster_id"), iter)
   }
 }

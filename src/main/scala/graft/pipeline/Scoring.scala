@@ -44,11 +44,11 @@ object Scoring {
     * (kora vs korarorapep: codes KR vs KRRP, rating 4 = minimum 4), so
     * unbounded prefix containment would chain short names into long ones.
     * Calibrated on the fixture families vs 32k synthetic entities
-    * (tools/MergeDiagnose): keeps all 41 real-name families transitively
-    * connected while cutting cross-entity MRA edges in the dense
-    * synthetic name space by 94% — MRA+JW-0.85 alone rates far too
-    * leniently to be a transitive-closure edge at scale (it chained 18
-    * entities into one 450-file cluster at 800k files).
+    * (BENCH.md, round 3): keeps all 41 real-name families transitively
+    * connected (pinned by ScoringSpec) while cutting cross-entity MRA
+    * edges in the dense synthetic name space by 94% — MRA+JW-0.85 alone
+    * rates far too leniently to be a transitive-closure edge at scale (it
+    * chained 18 entities into one 450-file cluster at 800k files).
     */
   val MraJwStrong = 0.90
   val MraLevLoose = 2

@@ -2,9 +2,7 @@ package graft.tools
 
 /** Pure-CPU host-window quality probe: N-thread Phonex encode throughput,
   * no Spark involved — so a degraded host window (noisy neighbor,
-  * descheduled vCPUs) is distinguishable from an engine regression. The
-  * standalone main prints 4- and 16-thread rates (normal on this host:
-  * ~9-10M at 4 threads, ~35M at 16; an episode reads a fraction of that);
+  * descheduled vCPUs) is distinguishable from an engine regression.
   * [[probe]] is reused by [[graft.Bench]] to stamp every official bench
   * JSON with the host capacity AT measurement time.
   */
@@ -43,13 +41,5 @@ object WindowProbe {
   def probe(nThreads: Int, reps: Int = 3, perThread: Int = 1000000): Long = {
     mt(nThreads, math.min(perThread, 300000)) // warm
     (1 to reps).map(_ => mt(nThreads, perThread)).max.toLong
-  }
-
-  def main(args: Array[String]): Unit = {
-    graft.Bench.warmCpus(16)
-    val p4 = probe(4)
-    val p16 = probe(16)
-    println(s"WINDOW_PROBE probe4=$p4 probe16=$p16 " +
-      f"eff=${p16.toDouble / p4 / 4.0}%.2f")
   }
 }

@@ -67,6 +67,12 @@ class TableIOSpec extends AnyFunSuite {
       .queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters: [isnotnull(lang"), plan)
     assert(io.read("by_lang").where($"lang" === "scala").count() == 2)
+    // partitioned stages record no schema: the read infers it
+    val m = io.manifest("by_lang").get
+    assert(!m.contains("schema_b64"), m)
+    assert(io.read("by_lang").select("id", "lang").as[(Long, String)]
+      .collect().sortBy(_._1).toSeq ==
+      Seq((1L, "scala"), (2L, "java"), (3L, "scala"), (4L, "rust")))
   }
 
   test("a stage whose upstream recomputed after it is not resumed") {

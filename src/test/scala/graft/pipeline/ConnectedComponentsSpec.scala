@@ -155,25 +155,50 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     // the same seeded random topologies through BOTH physical loops:
     // smallGraphMaxEdges=0 forces the DataFrame loop, the default runs
     // the fixed-partitioner RDD loop — identical algorithm, so labels
-    // and round counts must match exactly
+    // and round counts must match exactly. Some edges touch ids n..n+2,
+    // which are not in `vertices`: both loops must label exactly the
+    // vertex set, never such an endpoint.
     (0 until 6).foreach { seed =>
       val rnd = new scala.util.Random(100 + seed)
       val n = 8 + rnd.nextInt(60)
       val edges = Seq.fill(rnd.nextInt(2 * n))(
         (rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
-        .filter { case (a, b) => a != b }
+        .filter { case (a, b) => a != b } ++
+        Seq.fill(1 + rnd.nextInt(4))(
+          (rnd.nextInt(n).toLong, n.toLong + rnd.nextInt(3))) :+
+        ((n + 1).toLong, (n + 2).toLong)
       val vdf = (0L until n.toLong).toDF("file_id")
       val edf = edges.toDF("src", "dst")
       val (small, roundsSmall) =
         ConnectedComponents.runCounted(spark, vdf, edf)
       val (large, roundsLarge) = ConnectedComponents.runCounted(
         spark, vdf, edf, smallGraphMaxEdges = 0L)
+      val smallRows =
+        small.collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+      val largeRows =
+        large.collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+      assert(smallRows.map(_._1) == (0L until n.toLong), s"seed=$seed")
+      assert(largeRows.map(_._1) == (0L until n.toLong), s"seed=$seed")
       assert(roundsSmall == roundsLarge, s"seed=$seed")
-      assert(
-        small.collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq ==
-          large.collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq,
-        s"seed=$seed n=$n edges=$edges")
+      assert(smallRows == largeRows, s"seed=$seed n=$n edges=$edges")
     }
+  }
+
+  test("the small-graph loop leaves only its result RDD persisted") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val vdf = (0L until 64L).toDF("file_id")
+    val edf = (0L until 63L).map(i => (i, i + 1)).toDF("src", "dst")
+    // RDD ids only grow, so the RDDs the two runs persisted are the ones
+    // above the highest id persisted before them. The results stay
+    // referenced: an RDD they still reach cannot leave the (weak-valued)
+    // persistent-RDD map by garbage collection.
+    val before = sc.getPersistentRDDs.keys.maxOption.getOrElse(-1)
+    val results = (1 to 2).map(_ => ConnectedComponents.run(spark, vdf, edf))
+    results.foreach(r =>
+      assert(r.collect().map(_.getLong(1)).toSet === Set(0L)))
+    val left = sc.getPersistentRDDs.keys.filter(_ > before)
+    assert(left.size <= 2, s"RDDs left persisted by two runs: $left")
   }
 
   test("pointer jumping converges in O(log diameter) rounds") {
